@@ -40,7 +40,7 @@ object Plans {
       SparkEntry.queries("q01_scan_project")(spark, sf))
 
     show("Extraction (pages -> assertions)",
-      "Narrow codegen pipeline over the scan: posexplode + regexp, NO Exchange.")(
+      "Narrow codegen pipeline over the scan: the native sentence_matches generator via inline, NO Exchange.")(
       TripleExtract.assertions(inputs.pages))
 
     show("Entity linking",

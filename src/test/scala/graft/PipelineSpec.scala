@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.TableFormat
@@ -74,5 +75,31 @@ class PipelineSpec extends AnyFunSuite {
     assert(rows.length <= 5)
     val u = rows.map(_.getAs[Double]("uncertainty")).toSeq
     assert(u == u.sorted.reverse)
+  }
+
+  test("a page with malformed UTF-8 html is dropped by text_ok, not fatal (tiny)") {
+    import spark.implicits._
+    val cfg = Fixtures.tiny
+    val inputs = KgPipeline.fixtureInputs(spark, cfg)
+    // a page with its own assertion (CHEBI treats MONDO) whose html body
+    // carries malformed bytes: the re-extracted text holds U+FFFD, so it
+    // cannot equal the stored text
+    val text = "Entity2 treats Entity0. Research on kw2 alongside kw0 continues. Malformed note zq."
+    val html = ("<html><body><p>Entity2 treats Entity0.</p>" +
+      "<p>Research on kw2 alongside kw0 continues.</p><p>Malformed note zq").getBytes("UTF-8") ++
+      Array(0x41, 0xC3, 0x28, 0xFF, 0x42).map(_.toByte) ++ ".</p></body></html>".getBytes("UTF-8")
+    val bad = graft.core.Page("https://fixture.test/malformed", Fixtures.tsOf(0L), html, text, "en")
+    assert(Seq(bad).toDF()
+      .select(graft.extract.TextExtract.extractTextCol(col("html")) =!= col("text"))
+      .as[Boolean].head())
+    def scoredRows(extra: Seq[graft.core.Page]) = KgPipeline.runWith(spark,
+      inputs.copy(pages = inputs.pages.unionByName(extra.toDF()))).scored
+      .collect().map(_.toString).toSet
+    val clean = scoredRows(Nil)
+    assert(scoredRows(Seq(bad)) == clean, "the malformed page contributed assertions")
+    // control: the same page with well-formed html does contribute
+    val ok = bad.copy(url = "https://fixture.test/wellformed",
+      html = html.filter(_ >= 0), text = text.replace("zq.", "zqA(B."))
+    assert(scoredRows(Seq(ok)) != clean)
   }
 }

@@ -51,7 +51,8 @@ class PlanSpec extends AnyFunSuite {
       s"link stage shuffles the mention table:\n$plan")
     // note: the argmax uses higher-order `aggregate`/`transform`
     // (CodegenFallback) so this operator is interpreted by design; the
-    // regex-heavy extraction below stays in whole-stage codegen.
+    // extraction below runs inside whole-stage codegen, its native
+    // kernels called from the generated code.
   }
 
   test("extraction is a narrow codegen pipeline over the scan (no Exchange)") {
@@ -63,6 +64,33 @@ class PlanSpec extends AnyFunSuite {
     // codegen'd operators print as "*(n) Op" in the final plan string
     assert(plan.contains("WholeStageCodegen") || "\\*\\(\\d+\\)".r.findFirstIn(plan).isDefined,
       s"extraction fell out of codegen:\n$plan")
+  }
+
+  test("extraction runs the native kernels; the pipeline still verifies the text") {
+    val inputs = KgPipeline.fixtureInputs(spark, Fixtures.tiny)
+    val plan = planOf(TripleExtract.assertions(inputs.pages))
+    assert(plan.contains("sentence_matches(") && plan.contains("Generate inline"), plan)
+    assert(!plan.contains("regexp_extract") && !plan.contains("posexplode"), plan)
+    // the in-memory pipeline checkpoints the evidence built on the
+    // `assertions` stage: that action's plan must filter on the full
+    // re-extracted text equalling the stored text (`text_ok`)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      KgPipeline.run(spark, Fixtures.tiny)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      def extractPlan = plans.toArray(Array.empty[String]).find(_.contains("sentence_matches("))
+      while (extractPlan.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      val p = extractPlan.getOrElse(fail(s"no executed plan runs the extraction: $plans"))
+      assert("""html_to_text\(html#\d+\) = text#\d+""".r.findFirstIn(p).isDefined,
+        s"text_ok no longer compares the re-extracted text with text:\n$p")
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("CC distributed path shuffles long-typed keys (dictionary-encoded)") {
