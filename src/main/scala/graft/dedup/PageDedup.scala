@@ -1,6 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Web-page deduplication ahead of extraction — the standard first stage
@@ -10,83 +11,74 @@ import org.apache.spark.sql.functions._
   *
   * - exact: md5 fingerprint of whitespace-normalized lowercased text,
   *   keep the lexicographically smallest url per fingerprint.
-  * - minhash: 4-component seeded-md5 MinHash over 3-gram word shingles,
-  *   2 LSH bands; a page is dropped when any of its band buckets
-  *   contains a smaller url ("keep first in bucket" — deterministic,
-  *   one aggregation + one join; no transitive clustering pass).
+  * - minhash: 6-component MinHash over 3-gram word shingles, 2 LSH
+  *   bands; a page is dropped when any of its band buckets contains a
+  *   smaller url ("keep first in bucket" — deterministic, no transitive
+  *   clustering pass). Pages too short for one shingle fall back to the
+  *   exact fingerprint.
+  *
+  * Both modes are one blocking pass (the SparkER shape): a single scan
+  * of the pages assigns each page its keys, then [[dropNonMin]] keeps
+  * the min url per key with one shuffle, one sort and one Window, and
+  * builds lazily (no eager job).
   */
 object PageDedup {
 
   def fingerprint(text: Column): Column =
     md5(lower(regexp_replace(text, "\\s+", " ")))
 
-  /** Urls to drop under exact dedup. Only (url, fp) is ever shuffled —
-    * never the html payloads.
+  /** Urls of `keyed` rows greater than min(url) over their key, distinct.
+    * Only the narrow (url, key) rows shuffle — never the html payloads.
+    * Rows whose key columns are all NULL (pages with NULL text) form no
+    * group and are never dropped; a window partition would otherwise
+    * put them all in one group.
     */
-  def exactDropped(pages: DataFrame): DataFrame = {
-    // r8: fp feeds both the keeper aggregation and the drop join —
-    // checkpoint the narrow (url, fp) rows so the text scan +
-    // fingerprint md5 run once, not once per consumer (same shape as
-    // minhashDropped's band checkpoint)
-    val fp = pages.select(col("url"), fingerprint(col("text")).as("__fp"))
-      .localCheckpoint(true)
-    val keepers = fp.groupBy(col("__fp")).agg(min(col("url")).as("__keeper"))
-    fp.join(keepers, "__fp")
+  private def dropNonMin(keyed: DataFrame, keys: Seq[String]): DataFrame =
+    keyed.filter(keys.map(col(_).isNotNull).reduce(_ || _))
+      .select(col("url"), min(col("url")).over(Window.partitionBy(keys.map(col): _*))
+        .as("__keeper"))
       .filter(col("url") > col("__keeper"))
       .select(col("url"))
-  }
+      .distinct()
+
+  /** Urls to drop under exact dedup: one fingerprint key per page. */
+  def exactDropped(pages: DataFrame): DataFrame =
+    dropNonMin(pages.select(col("url"), fingerprint(col("text")).as("__fp")), Seq("__fp"))
 
   def exact(pages: DataFrame): DataFrame =
     pages.join(exactDropped(pages), Seq("url"), "left_anti")
 
-  /** (url, band) rows: 2 bands of 3 over a 6-component minhash
-    * signature — per-band collision probability is jaccard^3, steep
-    * enough that merely-templated pages don't collide.
-    *
-    * Signatures come from the native Catalyst expression
-    * [[graft.functions.MinHashSignature]] — one compiled loop per row.
-    * The equivalent `transform`+`aggregate` higher-order-function form
-    * is interpreted per array element by Catalyst's lambda evaluator and
-    * measured ~200 core-seconds per million pages; the expression is
-    * ~100x cheaper at identical semantics.
-    */
   private val shingleN = 3
 
-  private def bands(pages: DataFrame): DataFrame = {
-    // signature straight from the text bytes (zero per-token allocation
-    // — the banding pass is allocation-bound at high core counts);
-    // NULL = fewer tokens than one shingle. Short pages can't be
-    // near-dup'd by shingles — they fall back to the exact fingerprint
-    // below (round-2 fix: the old sentinel signature mass-dropped them).
-    val sig = graft.functions.MinHash.signatureFromText(col("text"), n = shingleN, k = 6)
-    pages.select(col("url"), sig.as("sig"))
-      .filter(col("sig").isNotNull)
-      .select(col("url"), explode(array(
-        xxhash64(element_at(col("sig"), 1), element_at(col("sig"), 2),
-          element_at(col("sig"), 3), lit(0)),
-        xxhash64(element_at(col("sig"), 4), element_at(col("sig"), 5),
-          element_at(col("sig"), 6), lit(1)))).as("band"))
-  }
-
-  /** Urls to drop under minhash near-dup. Sub-shingle-length pages are
-    * deduplicated by exact fingerprint instead (see [[bands]]).
+  /** Urls to drop under minhash near-dup. Signatures come from the native
+    * Catalyst expression [[graft.functions.TextMinHash]], one compiled
+    * zero-allocation loop over the text bytes per row (the equivalent
+    * `transform`+`aggregate` higher-order-function form measured ~100x
+    * slower). Keys, from one scan:
+    * - a page with at least `shingleN` tokens gets 2 rows `(band, NULL)`:
+    *   2 bands of 3 over a 6-component signature — per-band collision
+    *   probability is jaccard^3, steep enough that merely-templated pages
+    *   don't collide;
+    * - a shorter page (signature NULL; the same pages as
+    *   `size(split(text, ' ')) < shingleN`) can't be near-dup'd by
+    *   shingles and gets 1 row `(NULL, fingerprint)` instead.
+    *
+    * Band and fingerprint keys stay exact and never meet: each row has
+    * exactly one of the two set.
     */
   def minhashDropped(pages: DataFrame): DataFrame = {
-    // r8: the band frame feeds BOTH the keeper aggregation and the
-    // drop join's probe side — without materialization each consumer
-    // re-ran the MinHash signature over the full page text (the single
-    // hottest per-row expression in the pipeline; the banding pass is
-    // allocation-bound at high core counts). Checkpoint the narrow
-    // (url, band) rows so the signature computes once; text still
-    // never shuffles.
-    val b = bands(pages).localCheckpoint(true)
-    val keepers = b.groupBy(col("band")).agg(min(col("url")).as("__keeper"))
-    val near = b.join(keepers, "band")
-      .filter(col("url") > col("__keeper"))
-      .select(col("url"))
-    val shortExact = exactDropped(
-      pages.filter(size(split(col("text"), " ")) < shingleN))
-    near.unionAll(shortExact).distinct()
+    val sig = col("__sig")
+    def band(b: Int): Column = xxhash64(element_at(sig, 3 * b + 1),
+      element_at(sig, 3 * b + 2), element_at(sig, 3 * b + 3), lit(b)).as("__band")
+    val noBand = lit(null).cast("long").as("__band")
+    val noFp = lit(null).cast("string").as("__fp")
+    val keys = when(sig.isNull, array(struct(noBand, fingerprint(col("text")).as("__fp"))))
+      .otherwise(array(struct(band(0), noFp), struct(band(1), noFp)))
+    val keyed = pages
+      .select(col("url"), col("text"),
+        graft.functions.MinHash.signatureFromText(col("text"), n = shingleN, k = 6).as("__sig"))
+      .select(col("url"), inline(keys))
+    dropNonMin(keyed, Seq("__band", "__fp"))
   }
 
   def minhash(pages: DataFrame): DataFrame =

@@ -105,9 +105,12 @@ object KgPipeline {
 
     // ---- dedup: exact/near-duplicate page detection (Common-Crawl-style
     // corpora are heavily duplicated; duplicates double-count evidence).
-    // The drop set is computed from narrow (url, band) rows and applied
-    // to the EXTRACTED assertions below — the html payloads never
-    // shuffle (anti-joining the page table measured 6x the pipeline).
+    // The drop set is a lazy plan (no job here): one page scan assigns
+    // narrow (url, key) rows — the minhash bands, or the exact
+    // fingerprint for pages too short to shingle — and one keyed window
+    // keeps the min url per key. It is applied to the EXTRACTED
+    // assertions below — the html payloads never shuffle (anti-joining
+    // the page table measured 6x the pipeline).
     val pages = inputs.pages
     val droppedUrls = graft.dedup.PageDedup.droppedUrls(pages, dedup)
     val aliasDict = inputs.aliasDict

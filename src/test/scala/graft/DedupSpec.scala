@@ -65,6 +65,97 @@ class DedupSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](PageDedup(pages, "bogus"))
   }
 
+  private val modes = Seq("exact", "minhash")
+
+  private def dropped(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.as[String].collect().toSeq.sorted
+
+  /** `droppedUrls` == the keeper-join oracle, row for row, in both modes. */
+  private def assertMatchesOracle(pages: org.apache.spark.sql.DataFrame, clue: String): Unit =
+    modes.foreach { m =>
+      val got = dropped(PageDedup.droppedUrls(pages, m))
+      assert(got == dropped(DedupOracle.droppedUrls(pages, m)), s"$clue [$m]")
+      assert(got.distinct == got, s"$clue [$m]: drop set is not distinct")
+    }
+
+  test("NULL-text pages are never dropped; empty and whitespace-only pages dedup") {
+    val pages = Seq(
+      ("https://n/1", null), ("https://n/2", null),
+      ("https://e/1", ""), ("https://e/2", ""),
+      ("https://w/1", " \t "), ("https://w/2", " \t "),
+      ("https://t/1", "one two three four five six seven eight nine ten"))
+      .toDF("url", "text")
+    modes.foreach { m =>
+      assert(dropped(PageDedup.droppedUrls(pages, m)) == Seq("https://e/2", "https://w/2"), m)
+    }
+    assertMatchesOracle(pages, "null/empty/whitespace")
+  }
+
+  test("drop set == keeper-join oracle on every tiny and small fixture page") {
+    Seq(Fixtures.tiny, Fixtures.small).foreach { cfg =>
+      val pages = Fixtures.pages(spark, cfg).toDF()
+      assertMatchesOracle(pages, s"fixture ${cfg.nPages}")
+      // the fixture's republished pages must actually be dropped
+      assert(PageDedup.droppedUrls(pages, "minhash").count() > cfg.nPages / 10)
+    }
+  }
+
+  test("drop set == keeper-join oracle on token-count, spacing and url edge cases") {
+    val long = "the quick brown fox jumps over the lazy dog and then runs far away home tonight"
+    // a single-token substitution of `long` whose signature shares exactly
+    // one of the two bands (3 of the 6 components) with it
+    def sig(t: String): Seq[Long] = graft.functions.TextMinHash(
+      org.apache.spark.sql.catalyst.expressions.Literal(t), 3, 6).eval()
+      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray().toSeq
+    val base = sig(long)
+    val toks = long.split(" ")
+    val oneBand = (for {
+      i <- toks.indices.iterator
+      w <- Iterator("cat", "sun", "red", "oak", "sea", "ink")
+    } yield (toks.updated(i, w).mkString(" "))).map(t => t -> sig(t)).collectFirst {
+      case (t, s) if (s.take(3) == base.take(3)) != (s.drop(3) == base.drop(3)) => t
+    }.getOrElse(fail("no single-band collision among the substitutions"))
+    val texts = Seq(
+      "z/00" -> "", "z/01" -> "",
+      "a/10" -> "alpha", "a/11" -> "alpha", "a/12" -> "Alpha",
+      "b/20" -> "alpha beta", "b/21" -> "alpha beta", "b/22" -> "alpha  beta",
+      "c/30" -> "alpha beta gamma", "c/31" -> "alpha beta gamma",
+      "c/32" -> "alpha beta gamma ", "c/33" -> " alpha beta gamma",
+      "d/40" -> "a  b", "d/41" -> "a  b", "d/42" -> "a b ", "d/43" -> "a b ",
+      "d/44" -> "  ", "d/45" -> " ", "d/46" -> " ",
+      "l/50" -> long, "l/51" -> long, "l/52" -> long, "l/53" -> oneBand,
+      "u/60" -> "same url twice", "u/60" -> "same url twice",
+      "u/61" -> long, "u/61" -> "some other page text entirely here")
+    val pages = texts.map { case (u, t) => (s"https://$u", t) }.toDF("url", "text")
+    assertMatchesOracle(pages, "edge cases")
+    val got = dropped(PageDedup.droppedUrls(pages, "minhash")).toSet
+    assert(got.contains("https://l/53"), "a single-band collision must drop the page")
+    assert(!got.contains("https://u/60") && got.contains("https://u/61"))
+  }
+
+  test("drop set == keeper-join oracle on ScalaCheck token soups") {
+    import org.scalacheck.{Gen, Prop, Test}
+    // a 5-word vocabulary (plus the empty token of a double space) makes
+    // 3-shingles, and so bands, collide often
+    val text: Gen[String] = for {
+      n <- Gen.choose(0, 9)
+      toks <- Gen.listOfN(n, Gen.oneOf("a", "b", "c", "d", "e", ""))
+      sep <- Gen.oneOf(" ", " ", "  ")
+      pad <- Gen.oneOf("", "", " ")
+    } yield toks.mkString(sep) + pad
+    val page: Gen[(String, String)] = for {
+      u <- Gen.choose(0, 40)
+      t <- Gen.frequency(20 -> text.map(Some(_)), 1 -> Gen.const(None))
+    } yield (f"https://s/$u%02d", t.orNull)
+    val prop = Prop.forAllNoShrink(Gen.choose(1, 80).flatMap(Gen.listOfN(_, page))) { ps =>
+      assertMatchesOracle(ps.toDF("url", "text"), ps.toString)
+      true
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(12)
+      .withInitialSeed(org.scalacheck.rng.Seed(321L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
   test("pipeline P/R unchanged with minhash dedup on the fixture") {
     val cfg = Fixtures.tiny
     val res = graft.pipeline.KgPipeline.runWith(

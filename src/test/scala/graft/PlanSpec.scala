@@ -93,6 +93,64 @@ class PlanSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  test("dedup drop set: built lazily, one page scan, one keyed window, no keeper join") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val dir = java.nio.file.Files.createTempDirectory("dedup_plan").toString
+    Fixtures.pages(spark, Fixtures.tiny).toDF().write.mode("overwrite").parquet(dir)
+    val pages = spark.read.parquet(dir)
+    val modes = Seq("minhash", "exact")
+
+    // building the drop set starts no job: count this thread's jobs up to
+    // a marker job (the listener bus delivers events in order)
+    val sc = spark.sparkContext
+    val group = "dedup-laziness"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group).foreach { p =>
+          val d = String.valueOf(p.getProperty("spark.job.description"))
+          if (d == "marker") markerSeen.countDown() else jobs.add(d)
+        }
+    }
+    sc.addSparkListener(listener)
+    val built = try {
+      sc.setJobGroup(group, "building")
+      val b = modes.map(m => m -> graft.dedup.PageDedup.droppedUrls(pages, m))
+      sc.setJobDescription("marker")
+      spark.range(1).count()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job not seen")
+      b
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.isEmpty, s"droppedUrls started ${jobs.size} job(s)")
+
+    val helper = new AdaptiveSparkPlanHelper {}
+    built.foreach { case (m, df) =>
+      df.collect() // final AQE plan
+      val plan = df.queryExecution.executedPlan
+      def count(pf: PartialFunction[SparkPlan, SparkPlan]): Int = helper.collect(plan)(pf).size
+      val s = plan.toString
+      assert(count { case p: FileSourceScanExec => p } == 1, s"$m: pages not read once:\n$s")
+      val minhashes = helper.flatMap(plan)(_.expressions.flatMap(_.collect {
+        case e: graft.functions.TextMinHash => e
+      }))
+      assert(minhashes.size == (if (m == "minhash") 1 else 0), s"$m: text_minhash count:\n$s")
+      assert(count { case p: WindowExec => p } == 1, s"$m: expected one keyed window:\n$s")
+      // the window's key shuffle plus the distinct's url shuffle
+      assert(count { case p: ShuffleExchangeExec => p } == 2, s"$m: exchanges:\n$s")
+      Seq("Scan ExistingRDD", "SortAggregate", "Union", "BroadcastHashJoin").foreach { op =>
+        assert(!s.contains(op), s"$m: drop-set plan contains $op:\n$s")
+      }
+    }
+  }
+
   test("CC distributed path shuffles long-typed keys (dictionary-encoded)") {
     import spark.implicits._
     val edges = Seq(("CHEBI:1", "MONDO:2"), ("MONDO:2", "HP:3")).toDF("src", "dst")
