@@ -1,7 +1,6 @@
 package graft.graph
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Enclosing-subgraph extraction + double-radius node labeling for
@@ -63,316 +62,153 @@ object Subgraphs {
       driverThreshold: Long = 1 << 16): DataFrame = {
     require(mode == "enclosing" || mode == "union",
       s"encloseAndLabel mode must be enclosing|union, got '$mode'")
-    // Small inputs short-circuit to a driver loop with the SAME BFS /
-    // cap / label semantics (the encloseAndLabelCommunity discipline:
-    // the distributed scaffolding is h levels x ~3 fixed jobs per mode,
-    // pure overhead at dictionary-sized graphs; driverThreshold=0
-    // forces the distributed path — tests assert both paths emit
-    // identical rows). Engages only for the long-id + string-edge_id
-    // shape the local body computes on; other schemas keep the fully
-    // type-generic distributed path.
-    if (driverThreshold > 0 && localShape(edges, candidates)) {
-      // r8 (verdict nit 4): the probe used to run limit(th).count() on
-      // each input — two jobs whose scan work encloseLocal's collects
-      // then immediately redid. Probe BY collecting: a bounded
-      // limit(th) collect answers "is it small?" and, when yes, already
-      // IS the local input — 2 jobs instead of 4, nothing read twice.
-      // (A not-small input wastes one bounded th-row collect and falls
-      // through to the distributed path — the same bound the count
-      // probe paid.) Null endpoints are dropped pre-limit; they never
-      // contribute rows on either path, so the size gate only tightens.
-      val th = driverThreshold.toInt
-      val eRows = edges.select(col("src"), col("dst"))
-        .filter(col("src").isNotNull && col("dst").isNotNull)
-        .limit(th).collect()
-      if (eRows.length < th) {
-        val cRows = candidates.select(col("edge_id"), col("head"), col("tail"))
-          .limit(th).collect()
-        if (cRows.length < th)
-          return encloseLocal(edges.sparkSession,
-            eRows.map(r => (r.getLong(0), r.getLong(1))),
-            cRows.map(r => (r.getString(0), r.getLong(1), r.getLong(2))),
-            h, maxNodesPerHop, mode)
-      }
-    }
     if (mode == "union")
-      return unionExtract(edges, candidates, h, maxNodesPerHop)
-
-    // BFS from both roots per candidate (side 0 = head, 1 = tail), the
-    // OTHER root removed per side. The two per-root walks are
-    // independent, so running them as one side-keyed frontier halves
-    // the fixed per-level job count (each level = join + anti-join +
-    // localCheckpoint) without changing a single emitted row — the
-    // dedup, cap window and root-removal filter are all keyed by
-    // (edge_id, side). frontier rows: (edge_id, side, other, node, dist)
-    def bfsBoth(): DataFrame = {
-      var visited = candidates.select(
-        col("edge_id"), lit(0).as("side"), col("tail").as("other"),
-        col("head").as("node"), lit(0).as("dist"))
-        .unionAll(candidates.select(
-          col("edge_id"), lit(1).as("side"), col("head").as("other"),
-          col("tail").as("node"), lit(0).as("dist")))
-        .localCheckpoint(true)
-      var frontier = visited
-      var level = 0
-      while (level < h && frontier.limit(1).count() > 0) {
-        level += 1
-        var next = frontier
-          .join(edges, frontier("node") === edges("src"))
-          .filter(col("dst") =!= col("other")) // other root removed
-          .select(col("edge_id"), col("side"), col("other"), col("dst").as("node"))
-          .distinct()
-          .join(visited.select(col("edge_id").as("v_eid"),
-              col("side").as("v_side"), col("node").as("v_node")),
-            col("edge_id") === col("v_eid") && col("side") === col("v_side") &&
-              col("node") === col("v_node"),
-            "left_anti")
-        // per-candidate per-side per-level cap (dgl_utils.py:26-27):
-        // bounded frontier even when a candidate touches a hub node
-        maxNodesPerHop.foreach { cap =>
-          next = next.withColumn("__rn", row_number().over(
-            Window.partitionBy("edge_id", "side")
-              .orderBy(md5(col("node").cast("string")))))
-            .filter(col("__rn") <= cap)
-            .drop("__rn")
-        }
-        frontier = next
-          .select(col("edge_id"), col("side"), col("other"), col("node"),
-            lit(level).as("dist"))
-          .localCheckpoint(true)
-        // visited needs no checkpoint of its own: it is a union of
-        // already-checkpointed frames, so the anti-join re-reads cached
-        // blocks instead of paying one more eager job per level
-        visited = visited.unionAll(frontier)
-      }
-      visited.drop("other")
+      return gatherAndBeam(edges, candidates, h, maxNodesPerHop, community = false,
+        driverThreshold)
+    // BFS from both roots per candidate, the OTHER root removed per side
+    // (graph_sampler.py:365-391), per-(candidate, side) cap; the
+    // enclosing subgraph is the intersection of the two reaches (both
+    // walks stop at h, so the max(d_head, d_tail) <= h prune holds)
+    smallInput(edges, candidates, driverThreshold) match {
+      case Some((adj, cands)) =>
+        val spark = edges.sparkSession
+        import spark.implicits._
+        spark.createDataset(cands.toSeq.flatMap { case (eid, head, tail) =>
+          val dh = Bfs.walkLocal(adj, Seq(head), h, Some(tail), maxNodesPerHop)._1
+          val dt = Bfs.walkLocal(adj, Seq(tail), h, Some(head), maxNodesPerHop)._1
+          Seq(LabeledNode(eid, head, 0, 1), LabeledNode(eid, tail, 1, 0)) ++
+            dh.collect { case (n, a) if n != head && n != tail && dt.contains(n) =>
+              LabeledNode(eid, n, a, dt(n))
+            }
+        }).toDF()
+      case None =>
+        val walked = Bfs.walk(edges, rootSeeds(candidates, perRoot = true), h,
+          Some("other"), maxNodesPerHop)._1
+        def fromSide(side: Int, label: String) = walked.filter(col("side") === side)
+          .select(col("edge_id"), col("node"), col("dist").as(label))
+        // the roots themselves keep the reference's fixed labels
+        val roots = candidates.select(col("edge_id"),
+          col("head").as("node"), lit(0).as("d_head"), lit(1).as("d_tail"))
+          .unionAll(candidates.select(col("edge_id"),
+            col("tail").as("node"), lit(1).as("d_head"), lit(0).as("d_tail")))
+        val nonRoots = fromSide(0, "d_head")
+          .join(fromSide(1, "d_tail"), Seq("edge_id", "node"))
+          .join(candidates, Seq("edge_id"))
+          .filter(col("node") =!= col("head") && col("node") =!= col("tail"))
+          .select(col("edge_id"), col("node"), col("d_head"), col("d_tail"))
+        roots.unionAll(nonRoots)
     }
-
-    val walked = bfsBoth()
-    val fromHead = walked.filter(col("side") === 0).drop("side")
-      .withColumnRenamed("dist", "d_head")
-    val fromTail = walked.filter(col("side") === 1).drop("side")
-      .withColumnRenamed("dist", "d_tail")
-
-    // enclosing: nodes reached from BOTH roots (inner join) …
-    val both = fromHead.join(fromTail, Seq("edge_id", "node"))
-    // … plus the roots themselves with the reference's fixed labels
-    val roots = candidates.select(col("edge_id"),
-      col("head").as("node"), lit(0).as("d_head"), lit(1).as("d_tail"))
-      .unionAll(candidates.select(col("edge_id"),
-        col("tail").as("node"), lit(1).as("d_head"), lit(0).as("d_tail")))
-
-    val nonRoots = both
-      .join(candidates, Seq("edge_id"))
-      .filter(col("node") =!= col("head") && col("node") =!= col("tail"))
-      .select(col("edge_id"), col("node"), col("d_head"), col("d_tail"))
-      .filter(greatest(col("d_head"), col("d_tail")) <= h)
-
-    roots.unionAll(nonRoots)
   }
 
-  /** The driver fast path engages only when the local beam body's id
-    * contract holds exactly: BIGINT node ids everywhere and a string
-    * edge_id (no cast round-trips — "0123"-style string ids would
-    * silently canonicalize, so anything else stays distributed).
+  /** BFS seeds per candidate. Per root: (edge_id, side, other, node) with
+    * side 0 = head, 1 = tail and `other` the root to remove; jointly:
+    * (edge_id, node) for both roots, one BFS per candidate.
     */
-  private def localShape(edges: DataFrame, candidates: DataFrame): Boolean = {
+  private def rootSeeds(candidates: DataFrame, perRoot: Boolean): DataFrame = {
+    def from(root: String, other: String, side: Int) = candidates.select(
+      (col("edge_id") +: (if (perRoot) Seq(lit(side).as("side"), col(other).as("other"))
+        else Nil)) :+ col(root).as("node"): _*)
+    from("head", "tail", 0).unionAll(from("tail", "head", 1))
+  }
+
+  /** The driver fast path's input, when it engages: the (null-free)
+    * adjacency map and the candidates, each collected by one bounded
+    * probe. It engages only for small inputs (< `driverThreshold` rows
+    * each; 0 forces the distributed path — tests assert both paths emit
+    * identical rows) whose id contract the local bodies hold exactly:
+    * BIGINT node ids everywhere and a string edge_id (no cast round-trips
+    * — "0123"-style string ids would silently canonicalize, so anything
+    * else stays distributed). At dictionary-sized graphs the distributed
+    * scaffolding (an emptiness probe and a checkpoint per level, then the
+    * assembly) is pure overhead.
+    */
+  private def smallInput(edges: DataFrame, candidates: DataFrame, driverThreshold: Long)
+      : Option[(Map[Long, Array[Long]], Array[(String, Long, Long)])] = {
     import org.apache.spark.sql.types.{LongType, StringType}
-    candidates.schema("edge_id").dataType == StringType &&
+    val localShape = candidates.schema("edge_id").dataType == StringType &&
       Seq(candidates.schema("head"), candidates.schema("tail"),
         edges.schema("src"), edges.schema("dst"))
         .forall(_.dataType == LongType)
+    if (!localShape) None
+    else for {
+      e <- Bfs.collectSmall(Bfs.edgeList(edges), driverThreshold)
+      c <- Bfs.collectSmall(candidates.select("edge_id", "head", "tail"), driverThreshold)
+    } yield (e.map(r => (r.getLong(0), r.getLong(1))).groupMap(_._1)(_._2),
+      c.map(r => (r.getString(0), r.getLong(1), r.getLong(2))))
   }
 
-  /** Driver fast path for [[encloseAndLabel]], both modes: collect the
-    * (sub-64k) edge list once, then run the per-candidate walks
-    * in-process. Every semantic knob mirrors the distributed twin
-    * verbatim — root-removed per-side BFS + per-(edge_id, side) md5
-    * cap for enclosing; unremoved gather (joint seeds uncapped,
-    * per-root seeds when the cap binds) + the shared
-    * [[communityLabelBeam]] body with community off for union — so
-    * both paths emit identical rows (GraphSpec parity, threshold
-    * forced to 0 for the distributed side).
+  /** Gather, then label in a per-candidate beam: union mode
+    * (graph_sampler.py:331 `else` branch, `community` off) and the
+    * community flow (`community` on, see [[encloseAndLabelCommunity]]).
+    *
+    *   1. U = N_h(head) ∪ N_h(tail) WITHOUT root removal
+    *      (get_neighbor_nodes, graph_sampler.py:283-297): a U node reached
+    *      through the other root is later pruned by the root-removed
+    *      labels, but it belongs to U. Union mode walks each root on its
+    *      own once a cap binds (the reference applies np.random.choice to
+    *      each root's own BFS, so the sampling domains stay separate);
+    *      otherwise both roots seed one BFS — the visited set of a
+    *      multi-seed BFS is the union of the per-seed visited sets.
+    *   2. the induced edges of U, plus a marker row (head, head) that
+    *      guarantees every candidate a group even when U has no induced
+    *      edge (self-loops are ignored by the beam's adjacency build).
+    *   3. [[communityLabelBeam]], with full-graph src degrees (only the
+    *      community sweep reads them, so the distributed path joins them
+    *      in only then).
     */
-  private def encloseLocal(
-      spark: org.apache.spark.sql.SparkSession,
-      e: Array[(Long, Long)],
-      cands: Array[(String, Long, Long)],
-      h: Int,
-      maxNodesPerHop: Option[Int],
-      mode: String): DataFrame = {
-    import spark.implicits._
-    // inputs arrive pre-collected (null endpoints already dropped) from
-    // the dispatch probe — the probe's bounded collect IS the edge list
-    val adjAll: Map[Long, Array[Long]] = e.groupBy(_._1)
-      .map { case (k, v) => k -> v.map(_._2) }
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def md5hex(n: Long): String = {
-      md.reset()
-      md.digest(n.toString.getBytes("UTF-8"))
-        .map(b => f"${b & 0xff}%02x").mkString
-    }
-
-    val out: Seq[LabeledNode] =
-      if (mode == "enclosing") cands.iterator.flatMap { case (eid, head, tail) =>
-        // per-side root-removed BFS, per-level md5 cap per side —
-        // bfsBoth()'s (edge_id, side)-keyed frontier, localized
-        def walk(root: Long, other: Long): Map[Long, Int] = {
-          val d = scala.collection.mutable.Map(root -> 0)
-          var frontier = Set(root)
-          var level = 0
-          while (level < h && frontier.nonEmpty) {
-            level += 1
-            var next = frontier
-              .flatMap(n => adjAll.getOrElse(n, Array.empty[Long]))
-              .filter(n => n != other && !d.contains(n))
-            maxNodesPerHop.foreach { cap =>
-              next = next.toSeq.sortBy(md5hex).take(cap).toSet
-            }
-            next.foreach(n => d(n) = level)
-            frontier = next
-          }
-          d.toMap
-        }
-        val dh = walk(head, tail)
-        val dt = walk(tail, head)
-        Iterator(LabeledNode(eid, head, 0, 1), LabeledNode(eid, tail, 1, 0)) ++
-          dh.iterator.flatMap { case (n, a) =>
-            dt.get(n) match {
-              // intersection of the two root-removed reaches, roots
-              // excluded, max(d) <= h prune — the distributed
-              // roots/nonRoots assembly exactly
-              case Some(b) if n != head && n != tail && math.max(a, b) <= h =>
-                Iterator(LabeledNode(eid, n, a, b))
-              case _ => Iterator.empty
-            }
-          }
-      }.toSeq
-      else cands.iterator.flatMap { case (eid, head, tail) =>
-        // union gather: NO root removal; joint seeds when uncapped
-        // (visited set of a multi-seed BFS == union of per-seed sets),
-        // per-root seeds + per-root cap when the cap binds — exactly
-        // unionExtract's gather() dispatch
-        def gatherLocal(seeds: Seq[Long]): Set[Long] = {
-          var visited = seeds.toSet
-          var frontier = visited
-          var level = 0
-          while (level < h && frontier.nonEmpty) {
-            level += 1
-            var next = frontier
-              .flatMap(n => adjAll.getOrElse(n, Array.empty[Long]))
-              .diff(visited)
-            maxNodesPerHop.foreach { cap =>
-              next = next.toSeq.sortBy(md5hex).take(cap).toSet
-            }
-            frontier = next
-            visited ++= next
-          }
-          visited
-        }
-        val u =
-          if (maxNodesPerHop.isEmpty) gatherLocal(Seq(head, tail))
-          else gatherLocal(Seq(head)) ++ gatherLocal(Seq(tail))
-        // marker row first (as the distributed unionAll guarantees),
-        // then the induced edges enumerated off the visited set's
-        // adjacency lists; src_deg = 0 mirrors unionExtract's lit(0L)
-        // (the beam ignores degrees with community off)
-        val induced = Iterator((head, head, 0)) ++
-          u.iterator.flatMap { a =>
-            adjAll.getOrElse(a, Array.empty[Long]).iterator
-              .filter(u)
-              .map(b => (a, b, 0))
-          }
-        communityLabelBeam(eid, head, tail, induced, 0.0, h,
-          community = false)
-      }.toSeq
-    spark.createDataset(out).toDF()
-  }
-
-  /** Union-mode extraction (graph_sampler.py:331 `else` branch):
-    * per-root BFS WITHOUT root removal (get_neighbor_nodes semantics,
-    * with the per-level md5 cap applied per root exactly as the
-    * reference applies np.random.choice per root), nodes = roots ∪
-    * N_h(head) ∪ N_h(tail), then double-radius labels within the
-    * induced subgraph (other root removed) and the max(d) <= h prune —
-    * the same shared beam body as the community path, community
-    * pruning off.
-    */
-  private def unionExtract(
+  private def gatherAndBeam(
       edges: DataFrame,
       candidates: DataFrame,
       h: Int,
-      maxNodesPerHop: Option[Int]): DataFrame = {
+      cap: Option[Int],
+      community: Boolean,
+      driverThreshold: Long): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-
-    // BFS with NO other-root removal (the union gather may
-    // legitimately pass through the other root — such nodes are later
-    // pruned by the root-removed labeling, but they belong to U).
-    // Seeds: per root when the per-level cap binds (the reference
-    // applies np.random.choice per root's own BFS, so the sampling
-    // domains must stay separate); BOTH roots jointly when uncapped —
-    // the visited set of a multi-seed BFS equals the union of the
-    // per-seed visited sets, and one frontier loop costs half the
-    // fixed per-level jobs of two.
-    def gather(rootCols: Seq[String]): DataFrame = {
-      var visited = rootCols.map(rc =>
-          candidates.select(col("edge_id"), col(rc).as("node")))
-        .reduce(_ unionAll _).distinct()
-        .localCheckpoint(true)
-      var frontier = visited
-      var level = 0
-      while (level < h && frontier.limit(1).count() > 0) {
-        level += 1
-        var next = frontier
-          .join(edges, frontier("node") === edges("src"))
-          .select(col("edge_id"), col("dst").as("node"))
-          .distinct()
-          .join(visited.select(col("edge_id").as("v_eid"), col("node").as("v_node")),
-            col("edge_id") === col("v_eid") && col("node") === col("v_node"),
-            "left_anti")
-          .select("edge_id", "node")
-        maxNodesPerHop.foreach { cap =>
-          next = next.withColumn("__rn", row_number().over(
-            Window.partitionBy("edge_id").orderBy(md5(col("node").cast("string")))))
-            .filter(col("__rn") <= cap)
-            .drop("__rn")
-        }
-        frontier = next.localCheckpoint(true)
-        // visited needs no checkpoint of its own: it is a union of
-        // already-checkpointed frames, so the anti-join re-reads cached
-        // blocks instead of paying one more eager job per level
-        visited = visited.unionAll(frontier)
-      }
-      visited
+    val perRoot = !community && cap.nonEmpty
+    smallInput(edges, candidates, driverThreshold) match {
+      case Some((adj, cands)) =>
+        // symmetric edge list: out-degree == degree, row count == volume
+        // (the beam reads degrees only for the community sweep)
+        def deg(n: Long): Int = adj.get(n).fold(0)(_.length)
+        val totalVol = adj.valuesIterator.map(_.length.toDouble).sum
+        spark.createDataset(cands.toSeq.flatMap { case (eid, head, tail) =>
+          def reach(seeds: Long*) = Bfs.walkLocal(adj, seeds, h, None, cap)._1.keySet
+          val u = if (perRoot) reach(head) ++ reach(tail) else reach(head, tail)
+          // induced edges enumerate U's adjacency lists: bounded by the
+          // capped BFS, never a full edge scan per candidate
+          val induced = Iterator((head, head, deg(head))) ++ u.iterator.flatMap { a =>
+            adj.getOrElse(a, Array.empty[Long]).iterator.filter(u).map(b => (a, b, deg(a)))
+          }
+          communityLabelBeam(eid, head, tail, induced, totalVol, h, community)
+        }).toDF()
+      case None =>
+        val e = Bfs.edgeList(edges)
+        val u = Bfs.walk(e, rootSeeds(candidates, perRoot), h, cap = cap)._1
+          .select(col("edge_id"), col("node")).distinct()
+        val n1 = u.select(col("edge_id"), col("node").as("__s"))
+        val n2 = u.select(col("edge_id").as("__e2"), col("node").as("__d"))
+        val induced = e
+          .join(n1, e("src") === n1("__s"))
+          .join(n2, col("edge_id") === col("__e2") && e("dst") === n2("__d"))
+          .select(col("edge_id"), col("src"), col("dst"))
+        val markers = candidates.select(col("edge_id"),
+          col("head").as("src"), col("head").as("dst"))
+        val gathered = induced.unionAll(markers).join(candidates, Seq("edge_id"))
+        val beamCols = Seq("edge_id", "head", "tail", "src", "dst").map(col)
+        val (beam, totalVol) =
+          if (community) {
+            val degrees = e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
+            (gathered.join(degrees, Seq("src"), "left")
+              .select(beamCols :+ coalesce(col("__deg"), lit(0L)).as("src_deg"): _*),
+              e.count().toDouble)
+          } else (gathered.select(beamCols :+ lit(0L).as("src_deg"): _*), 0.0)
+        beam.as[BeamEdge].groupByKey(_.edge_id).flatMapGroups { (eid, rows) =>
+          val buf = rows.toArray
+          communityLabelBeam(eid, buf.head.head, buf.head.tail,
+            buf.iterator.map(r => (r.src, r.dst, r.src_deg.toInt)), totalVol, h, community)
+        }.toDF()
     }
-
-    val u =
-      if (maxNodesPerHop.isEmpty) gather(Seq("head", "tail"))
-      else gather(Seq("head")).unionAll(gather(Seq("tail"))).distinct()
-
-    // induced edges per candidate + per-candidate marker row (the
-    // community path's shape; src_deg is unused without the sweep)
-    val n1 = u.select(col("edge_id"), col("node").as("__s"))
-    val n2 = u.select(col("edge_id").as("__e2"), col("node").as("__d"))
-    val induced = edges
-      .join(n1, edges("src") === n1("__s"))
-      .join(n2, col("edge_id") === col("__e2") && edges("dst") === n2("__d"))
-      .select(col("edge_id"), col("src"), col("dst"))
-    val markers = candidates.select(col("edge_id"),
-      col("head").as("src"), col("head").as("dst"))
-    val beam = induced.unionAll(markers)
-      .join(candidates, Seq("edge_id"))
-      .select(col("edge_id"), col("head"), col("tail"),
-        col("src"), col("dst"), lit(0L).as("src_deg"))
-      .as[BeamEdge]
-
-    beam.groupByKey(_.edge_id).flatMapGroups { (eid, rows) =>
-      val buf = rows.toArray
-      communityLabelBeam(eid, buf.head.head, buf.head.tail,
-        buf.iterator.map(r => (r.src, r.dst, r.src_deg.toInt)), 0.0, h,
-        community = false)
-    }.toDF()
   }
 
   /** One gathered beam row: an induced edge of a candidate's h-hop
@@ -407,7 +243,8 @@ object Subgraphs {
     * mp.Pool worker. Deviation (documented): the reference evaluates PPR
     * on the full graph; the beam evaluates it on the gathered h-hop
     * neighborhood — the push algorithm's mass outside the seeds'
-    * neighborhood is below eps by construction.
+    * neighborhood is below eps by construction. Small inputs run the same
+    * gather and beam on the driver (see [[encloseAndLabel]]).
     *
     * edges(src,dst) symmetric with LONG node ids (dictionary-encode
     * upstream); candidates(edge_id, head, tail).
@@ -418,135 +255,8 @@ object Subgraphs {
       candidates: DataFrame,
       h: Int,
       maxNodesPerHop: Option[Int] = None,
-      driverThreshold: Long = 1 << 16): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-
-    // Small inputs short-circuit to a driver loop over the SAME
-    // per-candidate beam body (communityLabelBeam) — the distributed
-    // scaffolding costs h BFS rounds of ~3 jobs each plus the induced
-    // join, all fixed overhead at stats-subgraph size (the CC /
-    // dictionary / all-pairs-BFS adaptivity discipline). Pass
-    // driverThreshold=0 to force the distributed path (tests assert
-    // both paths emit identical rows).
-    if (driverThreshold > 0 &&
-        edges.limit(driverThreshold.toInt).count() < driverThreshold &&
-        candidates.limit(driverThreshold.toInt).count() < driverThreshold) {
-      // null endpoints dropped explicitly — the distributed path drops
-      // them via join misses, and Row.getLong would NPE
-      val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .filter(col("src").isNotNull && col("dst").isNotNull)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val adjAll: Map[Long, Array[Long]] = e.groupBy(_._1)
-        .map { case (k, v) => k -> v.map(_._2) }
-      val degAll: Map[Long, Int] = adjAll.map { case (k, v) => k -> v.length }
-      val totalVol = e.length.toDouble
-      val md = java.security.MessageDigest.getInstance("MD5")
-      def md5hex(n: Long): String = {
-        md.reset()
-        md.digest(n.toString.getBytes("UTF-8"))
-          .map(b => f"${b & 0xff}%02x").mkString
-      }
-      val cands = candidates.select(col("edge_id").cast("string"),
-        col("head").cast("long"), col("tail").cast("long"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      val out = cands.iterator.flatMap { case (eid, head, tail) =>
-        // union neighborhood, both roots seeded, per-level md5 cap —
-        // the same gather semantics as the distributed frontier joins
-        var visited = Set(head, tail)
-        var frontier = Set(head, tail)
-        var level = 0
-        while (level < h && frontier.nonEmpty) {
-          level += 1
-          var next = frontier.flatMap(n => adjAll.getOrElse(n, Array.empty[Long]))
-            .diff(visited)
-          maxNodesPerHop.foreach { cap =>
-            next = next.toSeq.sortBy(md5hex).take(cap).toSet
-          }
-          frontier = next
-          visited ++= next
-        }
-        // marker row first, exactly as the distributed unionAll does
-        // (guarantees fullDeg carries the head even for empty beams).
-        // Induced edges enumerate the VISITED set's adjacency lists —
-        // O(sum deg(visited)) per candidate, already bounded by the
-        // capped BFS — never a full edge-array scan per candidate
-        // (which would be O(candidates x edges) at the threshold).
-        val induced = Iterator((head, head, degAll.getOrElse(head, 0))) ++
-          visited.iterator.flatMap { u =>
-            adjAll.getOrElse(u, Array.empty[Long]).iterator
-              .filter(visited)
-              .map(v => (u, v, degAll.getOrElse(u, 0)))
-          }
-        communityLabelBeam(eid, head, tail, induced, totalVol, h)
-      }.toSeq
-      return spark.createDataset(out).toDF()
-    }
-
-    // 1. per-candidate union neighborhood, both roots seeded at once
-    var visited = candidates.select(col("edge_id"), col("head").as("node"))
-      .unionAll(candidates.select(col("edge_id"), col("tail").as("node")))
-      .distinct()
-      .localCheckpoint(true)
-    var frontier = visited
-    var level = 0
-    while (level < h && frontier.limit(1).count() > 0) {
-      level += 1
-      var next = frontier
-        .join(edges, frontier("node") === edges("src"))
-        .select(col("edge_id"), col("dst").as("node"))
-        .distinct()
-        .join(visited.select(col("edge_id").as("v_eid"), col("node").as("v_node")),
-          col("edge_id") === col("v_eid") && col("node") === col("v_node"),
-          "left_anti")
-        .select("edge_id", "node")
-      maxNodesPerHop.foreach { cap =>
-        next = next.withColumn("__rn", row_number().over(
-          Window.partitionBy("edge_id").orderBy(md5(col("node").cast("string")))))
-          .filter(col("__rn") <= cap)
-          .drop("__rn")
-      }
-      frontier = next.localCheckpoint(true)
-      // union of checkpointed frames - no extra eager job (see above)
-      visited = visited.unionAll(frontier)
-    }
-
-    // full-graph degree per node + total volume (symmetric edge list:
-    // out-degree == degree, row count == volume) — the sweep needs both.
-    // Null endpoints are excluded here exactly as the driver fast path
-    // excludes them, so the PPR sweep-cut normalization (totalVol) is
-    // identical on both paths even for inputs with null rows.
-    val cleanEdges = edges
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-    val degrees = cleanEdges.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
-    val totalVol = cleanEdges.count().toDouble
-
-    // 2. induced edges per candidate (both endpoints in the beam)
-    val n1 = visited.select(col("edge_id"), col("node").as("__s"))
-    val n2 = visited.select(col("edge_id").as("__e2"), col("node").as("__d"))
-    val induced = edges
-      .join(n1, edges("src") === n1("__s"))
-      .join(n2, col("edge_id") === col("__e2") && edges("dst") === n2("__d"))
-      .select(col("edge_id"), col("src"), col("dst"))
-    // marker row per candidate guarantees every candidate forms a group
-    // even when its beam has no induced edges (self-loops are ignored by
-    // the adjacency build below)
-    val markers = candidates.select(col("edge_id"),
-      col("head").as("src"), col("head").as("dst"))
-    val beam = induced.unionAll(markers)
-      .join(candidates, Seq("edge_id"))
-      .join(degrees, Seq("src"), "left")
-      .select(col("edge_id"), col("head"), col("tail"), col("src"), col("dst"),
-        coalesce(col("__deg"), lit(0L)).as("src_deg"))
-      .as[BeamEdge]
-
-    // 3-5. per-candidate beam: multicom + induced-subgraph double-radius
-    beam.groupByKey(_.edge_id).flatMapGroups { (eid, rows) =>
-      val buf = rows.toArray
-      communityLabelBeam(eid, buf.head.head, buf.head.tail,
-        buf.iterator.map(r => (r.src, r.dst, r.src_deg.toInt)), totalVol, h)
-    }.toDF()
-  }
+      driverThreshold: Long = 1 << 16): DataFrame =
+    gatherAndBeam(edges, candidates, h, maxNodesPerHop, community = true, driverThreshold)
 
   /** The per-candidate multicom beam body — ONE implementation shared
     * by the distributed flatMapGroups path and the driver fast path so
@@ -579,22 +289,8 @@ object Subgraphs {
       case (k, vs) if subNodes(k) => k -> vs.filter(subNodes)
     }
     // BFS within the induced subgraph, one root removed
-    def dists(root: Long, removed: Long): Map[Long, Int] = {
-      val d = scala.collection.mutable.Map(root -> 0)
-      var front = List(root)
-      var lvl = 0
-      while (front.nonEmpty && lvl < h) {
-        lvl += 1
-        front = front
-          .flatMap(u => subAdj.getOrElse(u, Array.empty[Long]))
-          .filter(v => v != removed && !d.contains(v))
-          .distinct
-        front.foreach(v => d(v) = lvl)
-      }
-      d.toMap
-    }
-    val dh = dists(head, tail)
-    val dt = dists(tail, head)
+    val dh = Bfs.walkLocal(subAdj, Seq(head), h, Some(tail))._1
+    val dt = Bfs.walkLocal(subAdj, Seq(tail), h, Some(head))._1
     val rootRows = Iterator(
       LabeledNode(eid, head, 0, 1), LabeledNode(eid, tail, 1, 0))
     val nodeRows = cluster.iterator.flatMap { n =>

@@ -201,6 +201,18 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
+  test("eccentricity stats: null endpoints are dropped on both paths") {
+    // a null endpoint is no node: before, the driver path counted it as
+    // one and the distributed path re-emitted it at every level
+    val e = Bfs.undirected(Seq((Some(1L), Some(2L)), (Some(2L), None), (Some(1L), None))
+      .toDF("src", "dst"))
+    for (thr <- Seq(1L << 16, 0L)) {
+      val got = Bfs.eccentricityStats(e, 4, driverThreshold = thr)
+        .as[(Long, Int, Int, Long)].collect()
+      assert(got.toSeq == Seq((1L, 1, 1, 2L)), s"driverThreshold=$thr: ${got.toSeq}")
+    }
+  }
+
   test("PPR push: mass concentrates near seeds; sweep cut finds the diamond") {
     val adj: Map[Long, Array[Long]] = rawEdges
       .flatMap { case (a, b) => Seq(a -> b, b -> a) }
@@ -229,5 +241,104 @@ class GraphSpec extends AnyFunSuite {
       assert(fast == dist, s"mode=$mode cap=$cap")
       assert(fast.nonEmpty)
     }
+  }
+
+  // Fixed-seed random graphs for the driver/distributed parity tests: up
+  // to 40 nodes, a hub adjacent to a random third or more of them,
+  // self-loops and duplicate edges. Edges are symmetrized WITHOUT
+  // `Bfs.undirected`'s distinct, so the duplicates reach the walks.
+  import org.scalacheck.{Gen, Prop, Test}
+  import GraphSpec.RandomGraph
+  implicit class RandomGraphFrames(g: RandomGraph) {
+    def edgesDF = g.und.toDF("src", "dst")
+    def candsDF = g.cands.toDF("edge_id", "head", "tail")
+  }
+  val randomGraph: Gen[RandomGraph] = for {
+    n <- Gen.choose(4, 40)
+    node = Gen.choose(1L, n.toLong)
+    raw <- Gen.listOfN(n, Gen.zip(node, node))
+    spokes <- Gen.pick(n / 3, 1L to n.toLong)
+    loops <- Gen.listOfN(2, node)
+    dups <- Gen.choose(1, 4)
+    pairs <- Gen.listOfN(2, Gen.zip(node, node))
+    hubLeaf <- Gen.oneOf(spokes.toSeq)
+    h <- Gen.choose(1, 3)
+  } yield {
+    val es = raw ++ spokes.map(s => (0L, s)) ++ loops.map(l => (l, l)) ++ raw.take(dups)
+    val cands = ((0L, hubLeaf) +: pairs).zipWithIndex
+      .map { case ((a, b), i) => (s"c$i", a, b) }
+    RandomGraph(es ++ es.map(_.swap), cands, h)
+  }
+  def forRandomGraphs(n: Int)(check: RandomGraph => Unit): Unit = {
+    val prop = Prop.forAllNoShrink(randomGraph) { g => check(g); true }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(n)
+      .withInitialSeed(org.scalacheck.rng.Seed(4242L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+  def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("random graphs: encloseAndLabel driver path == distributed path (modes x caps)") {
+    forRandomGraphs(6) { g =>
+      for (mode <- Seq("enclosing", "union"); cap <- Seq(None, Some(1), Some(3))) {
+        val fast = rows(Subgraphs.encloseAndLabel(g.edgesDF, g.candsDF, g.h, cap, mode))
+        val dist = rows(Subgraphs.encloseAndLabel(g.edgesDF, g.candsDF, g.h, cap, mode,
+          driverThreshold = 0))
+        assert(fast == dist, s"mode=$mode cap=$cap $g")
+        assert(fast.nonEmpty)
+      }
+    }
+  }
+
+  test("random graphs: encloseAndLabelCommunity driver path == distributed path") {
+    forRandomGraphs(6) { g =>
+      for (cap <- Seq(None, Some(2))) {
+        val fast = rows(Subgraphs.encloseAndLabelCommunity(g.edgesDF, g.candsDF, g.h, cap))
+        val dist = rows(Subgraphs.encloseAndLabelCommunity(g.edgesDF, g.candsDF, g.h, cap,
+          driverThreshold = 0))
+        assert(fast == dist, s"cap=$cap $g")
+        assert(fast.nonEmpty)
+      }
+    }
+  }
+
+  /** Plain single-process BFS: node -> level, within `h` hops of `seeds`. */
+  def plainBfs(adj: Map[Long, Seq[Long]], seeds: Seq[Long], h: Int): Map[Long, Int] = {
+    var dist = seeds.map(_ -> 0).toMap
+    var frontier = seeds.toSet
+    for (level <- 1 to h) {
+      frontier = frontier.flatMap(adj.getOrElse(_, Nil)).filterNot(dist.contains)
+      dist ++= frontier.map(_ -> level)
+    }
+    dist
+  }
+
+  test("random graphs: eccentricityStats driver path == distributed path at maxDepth = diameter") {
+    forRandomGraphs(6) { g =>
+      val adj = g.adj
+      val diameter = g.nodes.map(a => plainBfs(adj, Seq(a), g.nodes.size).values.max).max
+      val fast = rows(Bfs.eccentricityStats(g.edgesDF, diameter))
+      val dist = rows(Bfs.eccentricityStats(g.edgesDF, diameter, driverThreshold = 0))
+      assert(fast == dist, s"diameter=$diameter $g")
+      assert(fast.nonEmpty)
+    }
+  }
+
+  test("random graphs: kHop == plain BFS") {
+    forRandomGraphs(6) { g =>
+      val seeds = g.cands.map(_._3).distinct.take(2)
+      val got = Bfs.kHop(g.edgesDF, seeds.toDF("node"), g.h)
+        .as[(Long, Int)].collect()
+      assert(got.map(_._1).distinct.length == got.length, s"a node reached twice: $g")
+      assert(got.toMap == plainBfs(g.adj, seeds, g.h), s"$g")
+    }
+  }
+}
+
+object GraphSpec {
+  final case class RandomGraph(
+      und: Seq[(Long, Long)], cands: Seq[(String, Long, Long)], h: Int) {
+    def adj: Map[Long, Seq[Long]] = und.groupMap(_._1)(_._2)
+    def nodes: Seq[Long] = und.flatMap(e => Seq(e._1, e._2)).distinct.sorted
   }
 }

@@ -93,21 +93,13 @@ class PlanSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  test("dedup drop set: built lazily, one page scan, one keyed window, no keeper join") {
+  /** Runs `body` and returns the jobs it started: this thread's jobs,
+    * counted up to a marker job (the listener bus delivers events in
+    * order).
+    */
+  private def jobsStarted[T](group: String)(body: => T): (T, Seq[String]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.window.WindowExec
-    val dir = java.nio.file.Files.createTempDirectory("dedup_plan").toString
-    Fixtures.pages(spark, Fixtures.tiny).toDF().write.mode("overwrite").parquet(dir)
-    val pages = spark.read.parquet(dir)
-    val modes = Seq("minhash", "exact")
-
-    // building the drop set starts no job: count this thread's jobs up to
-    // a marker job (the listener bus delivers events in order)
     val sc = spark.sparkContext
-    val group = "dedup-laziness"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val markerSeen = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
@@ -118,16 +110,32 @@ class PlanSpec extends AnyFunSuite {
         }
     }
     sc.addSparkListener(listener)
-    val built = try {
+    try {
       sc.setJobGroup(group, "building")
-      val b = modes.map(m => m -> graft.dedup.PageDedup.droppedUrls(pages, m))
+      val out = body
       sc.setJobDescription("marker")
       spark.range(1).count()
       assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job not seen")
-      b
+      (out, jobs.toArray(Array.empty[String]).toSeq)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
+    }
+  }
+
+  test("dedup drop set: built lazily, one page scan, one keyed window, no keeper join") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val dir = java.nio.file.Files.createTempDirectory("dedup_plan").toString
+    Fixtures.pages(spark, Fixtures.tiny).toDF().write.mode("overwrite").parquet(dir)
+    val pages = spark.read.parquet(dir)
+    val modes = Seq("minhash", "exact")
+
+    // building the drop set starts no job
+    val (built, jobs) = jobsStarted("dedup-laziness") {
+      modes.map(m => m -> graft.dedup.PageDedup.droppedUrls(pages, m))
     }
     assert(jobs.isEmpty, s"droppedUrls started ${jobs.size} job(s)")
 
@@ -149,6 +157,23 @@ class PlanSpec extends AnyFunSuite {
         assert(!s.contains(op), s"$m: drop-set plan contains $op:\n$s")
       }
     }
+  }
+
+  test("community subgraph dispatch starts no more jobs than encloseAndLabel's") {
+    import spark.implicits._
+    import graft.graph.{Bfs, Subgraphs}
+    val edges = Bfs.undirected(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L),
+      (10L, 11L), (10L, 12L), (11L, 13L), (12L, 13L), (3L, 10L)).toDF("src", "dst"))
+    val cands = Seq(("e1", 11L, 12L)).toDF("edge_id", "head", "tail")
+    val (_, enclose) = jobsStarted("subgraph-enclose") {
+      Subgraphs.encloseAndLabel(edges, cands, 2)
+    }
+    val (_, community) = jobsStarted("subgraph-community") {
+      Subgraphs.encloseAndLabelCommunity(edges, cands, 2)
+    }
+    assert(enclose.nonEmpty, "encloseAndLabel no longer probes its inputs")
+    assert(community.size <= enclose.size,
+      s"community build started ${community.size} jobs, encloseAndLabel ${enclose.size}")
   }
 
   test("CC distributed path shuffles long-typed keys (dictionary-encoded)") {
